@@ -43,14 +43,12 @@ from pdf_parser_spark.sources.documents import media_pages
 
 def _page_entry(pages, page_no):
     """page entry → (tokens, matches, highlights, media_ref). Payloads
-    are (tokens, matches) [legacy], (tokens, matches, highlights)
-    [synthetic], or (tokens, matches, highlights, media_ref) [native —
-    the ref lets the Q/A layer rebuild a NativePerception lazily]."""
+    are (tokens, matches, highlights) [synthetic, fused native], or
+    (tokens, matches, highlights, media_ref) [paged native — the ref
+    lets the Q/A layer rebuild a NativePerception lazily]."""
     entry = pages.get(page_no)
     if entry is None:
         return [], [], [], None
-    if len(entry) == 2:
-        return entry[0], entry[1], [], None
     if len(entry) == 3:
         return entry[0], entry[1], entry[2], None
     return entry
@@ -64,7 +62,7 @@ def extract_document(
 ) -> list[tuple[str, str, str, int]]:
     """One document: cross-page label + question bookkeeping, per-page
     geometry + Q/A layer, canonical span flattening.
-    ``pages``: page_no → (tokens, matches[, highlights[, media_ref]]).
+    ``pages``: page_no → (tokens, matches, highlights[, media_ref]).
     ``sections``: one schema, or {variant: schema} selected per doc by
     the page-1 gender keyword (S5/F15).
     ``envs``: page_no → PerceptionEnv for K5/K6; pages without one fall
@@ -273,8 +271,6 @@ def _assemble_stream_factory(sections: list[dict]):
 def _fused_factory(sections: list[dict], decoder: str):
     """Fused per-doc pipeline: decode + geometry + flattening in one
     narrow pass (no shuffle). Used when decode cost ≪ transport cost."""
-    import pickle as _p  # noqa: F401  (parity of imports with stream path)
-
     from pdf_parser_spark.sources import perception as P
     from pdf_parser_spark.sources.decoder import decode_doc
 

@@ -11,6 +11,17 @@ with numpy. Relational window/join forms of the same operators live in
 ``pdf_parser_spark.operators`` and serve as the driver's oracle-checked
 queries.
 
+Perf posture: tokens are normalized once per page (``PageView``), and
+every line built by ``build_lines`` carries two IL1-folded keys of its
+tokens (``functions.text.line_key``): ``nkey`` over the F1 forms and
+``pkey`` over the F7 forms. The wrapped-label and section-header scans
+start only on lines whose key holds the folded first word of the label
+or header (``flex_key``). Folding maps 'L' and '1' to 'I' on both
+sides, so every F5/F6 match of a token is a substring of the line's key
+(the superset invariant in ``functions.text``): a skipped line is one
+where the exact matchers would return a run of 0, and the greedy scans
+still visit the remaining lines in order.
+
 Reference provenance (behavior, not code):
 - NMS match dedupe            /root/reference/extractor.py:155-181
 - line construction           /root/reference/extractor.py:303-322
@@ -30,7 +41,9 @@ from pdf_parser_spark import config as C
 from pdf_parser_spark.functions.text import (
     clean_label_sequence,
     flex_contains,
+    flex_key,
     flex_startswith,
+    line_key,
     normalize_text,
     ocr_norm_preserve_punct_upper,
 )
@@ -73,19 +86,20 @@ def nms_dedupe(matches: list[dict], max_dist: int = C.DEDUPE_MAX_DIST) -> list[d
 
 
 class PageView:
-    __slots__ = ("toks", "norm", "pnorm", "lines")
+    __slots__ = ("toks", "norm", "lines")
 
     def __init__(self, tokens: list[dict]):
         # blank-token filter (P6)
         self.toks = [t for t in tokens if str(t["text"]).strip()]
         self.norm = [normalize_text(t["text"]) for t in self.toks]
-        self.pnorm = [ocr_norm_preserve_punct_upper(t["text"]) for t in self.toks]
         self.lines = build_lines(self.toks)
 
 
 def build_lines(toks: list[dict]) -> list[dict]:
     """Group by (block, par, line) in first-seen order; line y = first
-    member's y; stable-sort lines by y."""
+    member's y; stable-sort lines by y. Each line carries its folded
+    keys (``functions.text.line_key``): ``nkey`` over the F1 forms for
+    the label scans, ``pkey`` over the F7 forms for the section scans."""
     index: dict[tuple, dict] = {}
     lines: list[dict] = []
     for t in toks:
@@ -96,6 +110,10 @@ def build_lines(toks: list[dict]) -> list[dict]:
             index[key] = ln
             lines.append(ln)
         ln["words"].append(t)
+    for ln in lines:
+        texts = [t["text"] for t in ln["words"]]
+        ln["nkey"] = line_key([normalize_text(s) for s in texts])
+        ln["pkey"] = line_key([ocr_norm_preserve_punct_upper(s) for s in texts])
     lines.sort(key=lambda ln: ln["y"])
     return lines
 
@@ -166,12 +184,14 @@ def _match_run_in_line(words: list[dict], lbl_words: list[str], start_lbl: int) 
 def _multiline_label(lines: list[dict], lbl_words: list[str]) -> tuple[int, int] | None:
     """Wrapped-label matcher: start run on one line, continue the
     remaining words on up to 5 following lines within a 160px
-    x-tolerance (preferred) or anywhere (fallback)."""
+    x-tolerance (preferred) or anywhere (fallback). A start line must
+    hold the label's folded first word in its key."""
     x_tol, max_ahead = C.LABEL_MULTILINE_BASE_X_TOLERANCE, C.LABEL_MULTILINE_MAX_LOOKAHEAD
+    first = flex_key(lbl_words[0])
     for i, line in enumerate(lines):
-        words = line["words"]
-        if not words:
+        if first not in line["nkey"]:
             continue
+        words = line["words"]
         start_idx, run = _match_run_in_line(words, lbl_words, 0)
         if run == 0 or start_idx is None:
             continue
@@ -371,10 +391,11 @@ def find_section_regions(
         if not name_words:
             continue
         best = None  # (matched, y, x) — max wins
+        first = flex_key(name_words[0])
         for i, line in enumerate(page.lines):
-            words = line["words"]
-            if not words:
+            if first not in line["pkey"]:
                 continue
+            words = line["words"]
             start_idx, matched = _section_span_in_line(words, name_words)
             if not matched or start_idx is None:
                 continue

@@ -8,8 +8,16 @@ reference provenance is cited there.
 
 Perf posture: token normalization is computed once per page (the
 reference re-normalizes per comparison); flex matchers are memoized in
-``functions.text``. Per-page cost is what multiplies by 10^12 docs —
-this kernel is the throughput hot path after decode.
+``functions.text``. Each matcher line also carries an IL1-folded key
+of its tokens' F7 forms (``functions.text.line_key``), and a question
+scan starts only on lines whose key holds the question's folded first
+word (``flex_key``). Folding maps 'L' and '1' to 'I' on both sides, so
+every F5/F6 match of a token is a substring of the line's key (the
+superset invariant in ``functions.text``): a skipped line is one where
+the exact matchers would return a run of 0, and the scan still visits
+the remaining lines in order. The next page's head lines are built once
+per page, on first use. Per-page cost is what multiplies by 10^12 docs
+— this kernel is the throughput hot path after decode.
 """
 
 from __future__ import annotations
@@ -20,7 +28,9 @@ from pdf_parser_spark import config as C
 from pdf_parser_spark.sources.perception import SyntheticPerception
 from pdf_parser_spark.functions.text import (
     flex_contains,
+    flex_key,
     flex_startswith,
+    line_key,
     ocr_norm_preserve_punct_upper as pnorm,
 )
 
@@ -36,7 +46,9 @@ _ZIP_RE = re.compile(r"^\d{5}(-\d{4})?$")
 
 
 class QAPage:
-    """Matcher + answer line views of one page's tokens, built once."""
+    """Matcher + answer line views of one page's tokens, built once.
+    Each matcher line carries ``key``, the folded key of its tokens' F7
+    forms (``functions.text.line_key``)."""
 
     __slots__ = ("m_lines", "a_lines")
 
@@ -64,6 +76,7 @@ class QAPage:
         self.m_lines = [m[k] for k in m_order]
         for ln in self.m_lines:
             ln["words"].sort(key=lambda w: w["x"])
+            ln["key"] = line_key([w["pn"] for w in ln["words"]])
         self.m_lines.sort(key=lambda ln: ln["y"])
         self.a_lines = sorted((a[k] for k in a_order), key=lambda ln: ln["y"])
 
@@ -130,12 +143,13 @@ def _best_run_in_line(words: list[dict], q_words: list[str], q_full: str):
     return best_start, best_run
 
 
-def _multiline_hit(lines: list[dict], q_words: list[str], q_full: str):
+def _multiline_hit(lines: list[dict], starts: list[int], q_words: list[str], q_full: str):
+    """First multiline hit starting on one of the lines ``starts``
+    (indices into ``lines``, ascending); continuations may use any line."""
     x_tol, max_ahead = C.LABEL_MULTILINE_BASE_X_TOLERANCE, C.LABEL_MULTILINE_MAX_LOOKAHEAD
-    for i, line in enumerate(lines):
+    for i in starts:
+        line = lines[i]
         words = line["words"]
-        if not words:
-            continue
         start_idx, run = _best_run_in_line(words, q_words, q_full)
         if run == 0:
             continue
@@ -235,7 +249,10 @@ def find_question_hits(
     lines: list[dict], questions: list[str]
 ) -> dict[str, list[dict]]:
     """Pass 1 (all same-line full matches, deduped by start) + pass 2
-    (one multiline hit) per unique question text."""
+    (one multiline hit) per unique question text. Both passes start only
+    on lines whose key holds the question's folded first word: every
+    hit (same-line, merged-token, or multiline start) begins at a token
+    that flex-startswith that word."""
     results: dict[str, list[dict]] = {}
     seen_q: set[str] = set()
     for q in questions:
@@ -246,24 +263,20 @@ def find_question_hits(
         if not q_words:
             continue
         q_full = " ".join(q_words)
-        # exact prefilter: any hit (same-line, merged-token, or
-        # multiline start) requires a token flex-startswith the first
-        # question word — skip scanning when no token qualifies
-        first = q_words[0]
-        if not any(
-            flex_startswith(first, w["pn"]) for line in lines for w in line["words"]
-        ):
+        first = flex_key(q_words[0])
+        starts = [i for i, line in enumerate(lines) if first in line["key"]]
+        if not starts:
             continue
         hits = []
         seen_starts = set()
-        for line in lines:
-            for seg in _full_matches_in_line(line["words"], q_words, q_full):
+        for i in starts:
+            for seg in _full_matches_in_line(lines[i]["words"], q_words, q_full):
                 key = (int(seg["start_x"]), int(seg["line_y"]))
                 if key in seen_starts:
                     continue
                 seen_starts.add(key)
                 hits.append({"x": key[0], "y": key[1], "segments": [seg]})
-        ml = _multiline_hit(lines, q_words, q_full)
+        ml = _multiline_hit(lines, starts, q_words, q_full)
         if ml is not None and (ml["x"], ml["y"]) not in seen_starts:
             hits.append(ml)
         if hits:
@@ -311,6 +324,9 @@ def match_question_sections(
             crop_views[key] = view
         return view
 
+    # this page's lines plus the next page's head, built on first use:
+    # it depends only on next_page_tokens
+    ext_lines: list[dict] | None = None
     out = []
     for sec in sections:
         name = sec["section_name"]
@@ -354,8 +370,11 @@ def match_question_sections(
                     if y2c_wide > y2c_primary:
                         hits = crop_hits(y2c_wide)
             if not hits and next_page_tokens is not None:
-                ext = page.m_lines + _head_lines(next_page_tokens, img_h, C.NEXT_PAGE_HEAD_LINES)
-                hits = [h for h in find_question_hits(ext, [q]).get(q, []) if in_band(h)]
+                if ext_lines is None:
+                    ext_lines = page.m_lines + _head_lines(
+                        next_page_tokens, img_h, C.NEXT_PAGE_HEAD_LINES
+                    )
+                hits = [h for h in find_question_hits(ext_lines, [q]).get(q, []) if in_band(h)]
             if not hits:
                 continue
             taken = claimed.setdefault(q, set())

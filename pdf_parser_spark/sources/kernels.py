@@ -611,8 +611,8 @@ def rasterize_pdf_bytes(data: bytes, dpi: int = 300) -> list[np.ndarray]:
 
 def tesseract_image_to_data(img: np.ndarray, psm: int = 6, lang: str | None = None,
                             config: str = "") -> list[dict]:
-    """K4 — OCR an image array into token rows in the engine's
-    TOKEN_STRUCT shape (reference: pytesseract.image_to_data
+    """K4 — OCR an image array into token rows with the token fields of
+    ``schemas.OCR_TOKENS_SCHEMA`` (reference: pytesseract.image_to_data
     Output.DICT, PSM 6 — extractor.py:987-989, constants.py:59).
     ``tok_seq`` is the raw Tesseract emission index (the reference
     consumes the parallel arrays positionally, extractor.py:289-301)."""

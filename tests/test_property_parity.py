@@ -19,6 +19,9 @@ VOCAB = [
     "PATIENT", "MEDICAL", "HISTORY", "PATIENTMEDICAL", "Pat1ent",
     "First", "Name", "FirstName", "Relationship", "Relat1onship",
     "a", "I", "l", "1", "-", "/", "Sulfa", "Drugs", "Sulfa/Drugs",
+    # non-ASCII spellings NFKD or upper() fold onto label words:
+    # fullwidth D, dotless i, long s, the fi ligature
+    "\uff24iabetes", "L\u0131ver", "Exerci\u017fe", "\ufb01rst", "Relat\u0131on\u017fhip",
 ]
 
 SECTIONS = [

@@ -5,6 +5,8 @@ Expectations hand-derived from the reference semantics
 
 import re
 
+from hypothesis import given, settings, strategies as st
+
 from pdf_parser_spark.functions import text as T
 
 
@@ -55,6 +57,58 @@ def test_flex_regex_matches_python_form():
         assert bool(re.match(pat_s, cand)) == T.flex_startswith(expected, cand)
         pat_c = T.flex_regex(expected, "none")
         assert bool(re.search(pat_c, cand)) == T.flex_contains(expected, cand)
+
+
+# IL1 confusables, mixed case, digits, the separators F1/F7 drop, and
+# non-ASCII forms NFKD or upper() rewrite: the fi ligature, fullwidth
+# letters, combining accents, sharp s (upper() → "SS"), dotless i
+# (upper() → "I") and long s (NFKD → "s")
+_FOLD_ALPHABET = list("IiLl1Aa0DdEeSs7/- ") + [
+    "\ufb01", "\uff24", "\uff4c", "\uff11", "\u0301", "\u0308", "\u00df", "\u0131", "\u017f",
+]
+_fold_text = st.text(alphabet=st.sampled_from(_FOLD_ALPHABET), max_size=8)
+# a raw candidate that often contains an IL1-respelled copy of a word
+_respell = st.sampled_from(["I", "i", "L", "l", "1", "\u0131"])
+
+
+@st.composite
+def _expected_and_line(draw):
+    expected = draw(_fold_text)
+    words = []
+    for _ in range(draw(st.integers(1, 3))):
+        copy = ""
+        if draw(st.booleans()):
+            copy = "".join(draw(_respell) if ch in "Ii" else ch for ch in expected)
+        words.append(draw(_fold_text) + copy + draw(_fold_text))
+    return expected, words
+
+
+@settings(max_examples=400, deadline=None)
+@given(_expected_and_line(), st.sampled_from([T.normalize_text, T.ocr_norm_preserve_punct_upper]))
+def test_flex_key_is_a_superset_of_flex_matching(case, norm):
+    """The line prefilter skips a line whose folded key lacks the folded
+    expected word; that is exact only if every F5/F6 match of an F1/F7
+    candidate leaves flex_key(expected) inside the candidate's key."""
+    expected, raw_words = case
+    cands = [norm(w) for w in raw_words]
+    key = T.line_key(cands)
+    for c in cands:
+        if T.flex_contains(expected, c) or T.flex_startswith(expected, c):
+            assert T.flex_key(expected) in key, (expected, c, key)
+
+
+def test_flex_key_examples():
+    # IL1 confusables fold together on both sides
+    assert T.flex_key("Liver") == "IIVER"
+    assert T.flex_key("Liver") in T.line_key([T.normalize_text("L1ver"), "DISEASE"])
+    assert T.flex_key("Liver") in T.line_key([T.normalize_text("l\u0131ver")])
+    # NFKD and upper() apply before the fold
+    assert T.flex_key("\ufb01rst") == "FIRST"
+    assert T.flex_key("Stra\u00dfe") == "STRASSE"
+    # keys never join two tokens into a match
+    assert T.flex_key("HeartDisease") not in T.line_key(["HEART", "DISEASE"])
+    # an empty expected word matches everything, so it never skips
+    assert T.flex_key("-/") == "" and T.flex_contains("-/", "")
 
 
 def test_oracle_and_engine_normalizers_agree():
