@@ -69,7 +69,7 @@ def extract_document(
     back to NativePerception(media_ref) when the payload carries a ref,
     else the synthetic model over the page's tokens+highlights."""
     from pdf_parser_spark.functions.text import detect_schema_variant
-    from pdf_parser_spark.plans.questions import page_responses
+    from pdf_parser_spark.plans import questions as Q
     from pdf_parser_spark.sources.perception import NativePerception
 
     if isinstance(sections, dict):
@@ -88,13 +88,16 @@ def extract_document(
     page_sections: dict[int, list[dict]] = {}
     page_resp: dict[int, list[dict]] = {}
 
+    # one view per page, built once: page n + 1's view is page n's next page
+    next_page = G.PageView(_page_entry(pages, 1)[0]) if n_pages else None
     for page_no in range(1, n_pages + 1):
         tokens, raw_matches, highlights, ref = _page_entry(pages, page_no)
         env = (envs or {}).get(page_no)
         if env is None and ref is not None:
             env = NativePerception(media_ref=ref)
         checkboxes = G.nms_dedupe(raw_matches)
-        page = G.PageView(tokens)
+        page = next_page
+        next_page = G.PageView(_page_entry(pages, page_no + 1)[0]) if page_no < n_pages else None
 
         active: list[dict] = []
         labels_to_search: list[str] = []
@@ -109,8 +112,7 @@ def extract_document(
             active.append(sec)
             labels_to_search.extend(sorted(rem))
 
-        next_tokens = _page_entry(pages, page_no + 1)[0] if page_no < n_pages else None
-        positions = G.find_label_positions(page, labels_to_search, next_tokens)
+        positions = G.find_label_positions(page, labels_to_search, next_page)
         regions = G.find_section_regions(page, sections, checkboxes)
 
         for sec in active:
@@ -148,10 +150,9 @@ def extract_document(
                 continue
             q_active.append(dict(sec, questions=list(rem_list)))
 
-        resp = page_responses(
-            tokens, q_active, regions,
-            checkboxes=checkboxes, highlights=highlights, next_page_tokens=next_tokens,
-            env=env,
+        resp = Q.page_responses(
+            tokens, page, q_active, regions,
+            checkboxes=checkboxes, highlights=highlights, next_page=next_page, env=env,
         )
         for rsec in resp or []:
             name = rsec.get("section")

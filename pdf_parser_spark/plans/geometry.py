@@ -11,16 +11,21 @@ with numpy. Relational window/join forms of the same operators live in
 ``pdf_parser_spark.operators`` and serve as the driver's oracle-checked
 queries.
 
-Perf posture: tokens are normalized once per page (``PageView``), and
-every line built by ``build_lines`` carries two IL1-folded keys of its
-tokens (``functions.text.line_key``): ``nkey`` over the F1 forms and
-``pkey`` over the F7 forms. The wrapped-label and section-header scans
-start only on lines whose key holds the folded first word of the label
-or header (``flex_key``). Folding maps 'L' and '1' to 'I' on both
-sides, so every F5/F6 match of a token is a substring of the line's key
-(the superset invariant in ``functions.text``): a skipped line is one
-where the exact matchers would return a run of 0, and the greedy scans
-still visit the remaining lines in order.
+Perf posture: ``PageView`` is the one page model of the kernel, built
+once per page and reused as the previous page's next page. It
+normalizes each token once (F1 and F7, kept on the word record) and
+groups the lines once, in token order for the label and section scans
+and x-sorted for the question scans; the next page's head is a y-shift
+of its first line groups, not a rebuild. Every line carries two
+IL1-folded keys of its tokens (``functions.text.line_key``): ``nkey``
+over the F1 forms and ``pkey`` over the F7 forms. The wrapped-label,
+section-header and question scans start only on lines whose key holds
+the folded first word of the label, header or question (``flex_key``).
+Folding maps 'L' and '1' to 'I' on both sides, so every F5/F6 match of
+a token is a substring of the line's key (the superset invariant in
+``functions.text``): a skipped line is one where the exact matchers
+would return a run of 0, and the greedy scans still visit the remaining
+lines in order.
 
 Reference provenance (behavior, not code):
 - NMS match dedupe            /root/reference/extractor.py:155-181
@@ -45,7 +50,7 @@ from pdf_parser_spark.functions.text import (
     flex_startswith,
     line_key,
     normalize_text,
-    ocr_norm_preserve_punct_upper,
+    ocr_norm_preserve_punct_upper as pnorm,
 )
 
 # ---------------------------------------------------------------------------
@@ -80,61 +85,126 @@ def nms_dedupe(matches: list[dict], max_dist: int = C.DEDUPE_MAX_DIST) -> list[d
 
 
 # ---------------------------------------------------------------------------
-# Page view with precomputed normalization (perf: the reference
-# re-normalizes every token at every comparison; we normalize once).
+# The page model: built once per page, reused as the previous page's
+# next page (perf: the reference re-normalizes every token at every
+# comparison and rebuilds the lines per pass; we do both once).
 # ---------------------------------------------------------------------------
 
 
 class PageView:
-    __slots__ = ("toks", "norm", "lines")
+    """One page's tokens and lines for every scan of the kernel.
+
+    ``toks``: one word record per non-blank token (P6),
+    ``dict(token, n=F1, pn=F7)`` with the raw text kept. ``lines``:
+    (block, par, line) groups in first-seen order, y = first member's
+    y, stable-sorted by y, words in token order, keys ``nkey`` (F1) and
+    ``pkey`` (F7) — the label and section scans. ``qlines``: the same
+    lines with x-sorted words — the question scans, keyed by ``pkey``
+    (key membership does not depend on word order)."""
+
+    __slots__ = ("toks", "lines", "qlines")
 
     def __init__(self, tokens: list[dict]):
-        # blank-token filter (P6)
-        self.toks = [t for t in tokens if str(t["text"]).strip()]
-        self.norm = [normalize_text(t["text"]) for t in self.toks]
-        self.lines = build_lines(self.toks)
+        self.toks = [
+            dict(t, n=normalize_text(t["text"]), pn=pnorm(t["text"]))
+            for t in tokens if str(t["text"]).strip()
+        ]
+        self.lines = _group_lines(self.toks)
+        self.qlines = _x_sorted(self.lines)
 
 
-def build_lines(toks: list[dict]) -> list[dict]:
-    """Group by (block, par, line) in first-seen order; line y = first
-    member's y; stable-sort lines by y. Each line carries its folded
-    keys (``functions.text.line_key``): ``nkey`` over the F1 forms for
-    the label scans, ``pkey`` over the F7 forms for the section scans."""
+def _group_lines(toks: list[dict]) -> list[dict]:
     index: dict[tuple, dict] = {}
     lines: list[dict] = []
     for t in toks:
         key = (t["block"], t["par"], t["line"])
         ln = index.get(key)
         if ln is None:
-            ln = {"words": [], "y": t["y"]}
-            index[key] = ln
+            ln = index[key] = {"words": [], "y": t["y"]}
             lines.append(ln)
         ln["words"].append(t)
     for ln in lines:
-        texts = [t["text"] for t in ln["words"]]
-        ln["nkey"] = line_key([normalize_text(s) for s in texts])
-        ln["pkey"] = line_key([ocr_norm_preserve_punct_upper(s) for s in texts])
+        ln["nkey"] = line_key([w["n"] for w in ln["words"]])
+        ln["pkey"] = line_key([w["pn"] for w in ln["words"]])
     lines.sort(key=lambda ln: ln["y"])
     return lines
 
 
-def next_page_head(next_tokens: list[dict], img_h: int, head_lines: int) -> list[dict]:
-    """First K distinct-y line groups of the next page, y-shifted by the
-    page height (cross-page continuation, J5/W6)."""
-    toks = [dict(t, y=t["y"] + img_h) for t in next_tokens if str(t["text"]).strip()]
-    if not toks:
-        return []
-    lines = build_lines(toks)
-    kept: list[dict] = []
-    groups = 0
-    i = 0
-    while i < len(lines) and groups < head_lines:
-        gy = lines[i]["y"]
-        while i < len(lines) and lines[i]["y"] == gy:
-            kept.append(lines[i])
-            i += 1
+def _x_sorted(lines: list[dict]) -> list[dict]:
+    return [dict(ln, words=sorted(ln["words"], key=lambda w: w["x"])) for ln in lines]
+
+
+def next_page_head(view: PageView, img_h: int, k: int) -> tuple[list[dict], list[dict]]:
+    """First k distinct-y line groups of the next page's view, y-shifted
+    by the page height (cross-page continuation, J5/W6), as
+    ``(lines, qlines)``. A constant shift keeps the stable y-sort, so
+    this equals building the lines of the shifted tokens."""
+    lines = view.lines
+    n = groups = 0
+    while n < len(lines) and groups < k:
+        gy = lines[n]["y"]
+        while n < len(lines) and lines[n]["y"] == gy:
+            n += 1
         groups += 1
-    return kept
+    head = [
+        dict(ln, y=ln["y"] + img_h, words=[dict(w, y=w["y"] + img_h) for w in ln["words"]])
+        for ln in lines[:n]
+    ]
+    return head, _x_sorted(head)
+
+
+def prefix_run(toks: list[dict], k: int, words: list[str], at: int = 0) -> int:
+    """Length of the run of ``words[at:]`` matched by the consecutive
+    tokens from ``toks[k]`` on: the first word by F6 prefix, the rest by
+    F5 containment, against the tokens' F7 forms."""
+    run = 0
+    while k + run < len(toks) and at + run < len(words):
+        match = flex_contains if run else flex_startswith
+        if not match(words[at + run], toks[k + run]["pn"]):
+            break
+        run += 1
+    return run
+
+
+def continue_lines(lines: list[dict], cur: int, x_ref: int, words: list[str], at: int) -> list[list[dict]]:
+    """Sibling-group continuation (W6/J5) of ``words[at:]`` after
+    ``lines[cur]``: each lookahead step takes the next distinct-y line
+    group (same-y sibling lines considered together) and keeps the
+    longest ``prefix_run`` starting at a candidate token — one near
+    ``x_ref`` holding the wanted word as a prefix, else any such token,
+    else one near ``x_ref`` containing it; first longest wins. At most 5
+    steps; returns the matched tokens of each step."""
+    x_tol = C.LABEL_MULTILINE_BASE_X_TOLERANCE
+    steps: list[list[dict]] = []
+    while at < len(words) and len(steps) < C.LABEL_MULTILINE_MAX_LOOKAHEAD:
+        j = cur + 1
+        while j < len(lines) and lines[j]["y"] <= lines[cur]["y"]:
+            j += 1
+        if j >= len(lines):
+            break
+        next_y, want = lines[j]["y"], words[at]
+        best_run, best_li, best_ci = 0, None, None
+        while j < len(lines) and lines[j]["y"] == next_y:
+            toks = lines[j]["words"]
+            cands = (
+                [k for k, t in enumerate(toks)
+                 if abs(t["x"] - x_ref) <= x_tol and flex_startswith(want, t["pn"])]
+                or [k for k, t in enumerate(toks) if flex_startswith(want, t["pn"])]
+                or [k for k, t in enumerate(toks)
+                    if abs(t["x"] - x_ref) <= x_tol and flex_contains(want, t["pn"])]
+            )
+            for ci in cands:
+                run = prefix_run(toks, ci, words, at)
+                if run > best_run:
+                    best_run, best_li, best_ci = run, j, ci
+            j += 1
+        if not best_run:
+            break
+        step = lines[best_li]["words"][best_ci : best_ci + best_run]
+        steps.append(step)
+        at += best_run
+        cur, x_ref = best_li, step[0]["x"]
+    return steps
 
 
 # ---------------------------------------------------------------------------
@@ -146,14 +216,14 @@ def _scan_exact(page: PageView, label: str) -> list[tuple[int, int]]:
     words = label.split()
     first_n, last_n = normalize_text(words[0]), normalize_text(words[-1])
     max_len = len(words)
-    toks, norm = page.toks, page.norm
+    toks = page.toks
     n = len(toks)
     hits: list[tuple[int, int]] = []
     for i in range(n):
-        if first_n not in norm[i]:
+        if first_n not in toks[i]["n"]:
             continue
         for j in range(i, min(i + max_len, n)):
-            if last_n not in norm[j]:
+            if last_n not in toks[j]["n"]:
                 continue
             seq_clean = clean_label_sequence([toks[k]["text"] for k in range(i, j + 1)])
             if flex_contains(label, seq_clean):
@@ -161,22 +231,26 @@ def _scan_exact(page: PageView, label: str) -> list[tuple[int, int]]:
     return hits
 
 
-def _match_run_in_line(words: list[dict], lbl_words: list[str], start_lbl: int) -> tuple[int | None, int]:
-    """Longest consecutive flex-contains run of lbl_words[start_lbl:]
-    starting anywhere in the line; returns (best_start_idx, run_len)."""
+def _contains_run(words: list[dict], k: int, lbl_words: list[str], at: int) -> int:
+    """Length of the run of ``lbl_words[at:]`` F5-contained in the F1
+    forms of the consecutive words from ``words[k]`` on."""
+    run = 0
+    while k + run < len(words) and at + run < len(lbl_words):
+        if not flex_contains(lbl_words[at + run], words[k + run]["n"]):
+            break
+        run += 1
+    return run
+
+
+def _match_run_in_line(words: list[dict], lbl_words: list[str]) -> tuple[int | None, int]:
+    """Longest consecutive flex-contains run of lbl_words starting
+    anywhere in the line; returns (best_start_idx, run_len)."""
     best_start, best_run = None, 0
     for si in range(len(words)):
-        run = 0
-        k = si
-        while k < len(words) and start_lbl + run < len(lbl_words):
-            if flex_contains(lbl_words[start_lbl + run], normalize_text(words[k]["text"])):
-                run += 1
-                k += 1
-            else:
-                break
+        run = _contains_run(words, si, lbl_words, 0)
         if run > best_run:
             best_run, best_start = run, si
-        if start_lbl + run == len(lbl_words):
+        if run == len(lbl_words):
             break
     return best_start, best_run
 
@@ -192,46 +266,27 @@ def _multiline_label(lines: list[dict], lbl_words: list[str]) -> tuple[int, int]
         if first not in line["nkey"]:
             continue
         words = line["words"]
-        start_idx, run = _match_run_in_line(words, lbl_words, 0)
+        start_idx, run = _match_run_in_line(words, lbl_words)
         if run == 0 or start_idx is None:
             continue
         start_x, start_y = words[start_idx]["x"], words[start_idx]["y"]
-        x_ref, lbl_at, cur = start_x, run, i
-        ahead = 0
-        while lbl_at < len(lbl_words) and ahead < max_ahead:
-            if cur + 1 >= len(lines):
-                break
-            nxt = lines[cur + 1]["words"]
-            if not nxt:
+        x_ref, lbl_at = start_x, run
+        for nxt in (ln["words"] for ln in lines[i + 1 : i + 1 + max_ahead]):
+            if lbl_at == len(lbl_words):
                 break
             want = lbl_words[lbl_at]
             cands = [
                 k for k, tok in enumerate(nxt)
-                if abs(tok["x"] - x_ref) <= x_tol
-                and flex_contains(want, normalize_text(tok["text"]))
-            ] or [
-                k for k, tok in enumerate(nxt)
-                if flex_contains(want, normalize_text(tok["text"]))
-            ]
-            if not cands:
-                break
+                if abs(tok["x"] - x_ref) <= x_tol and flex_contains(want, tok["n"])
+            ] or [k for k, tok in enumerate(nxt) if flex_contains(want, tok["n"])]
             best_run, best_ci = 0, None
             for ci in cands:
-                run2 = 0
-                k = ci
-                while k < len(nxt) and lbl_at + run2 < len(lbl_words):
-                    if flex_contains(lbl_words[lbl_at + run2], normalize_text(nxt[k]["text"])):
-                        run2 += 1
-                        k += 1
-                    else:
-                        break
+                run2 = _contains_run(nxt, ci, lbl_words, lbl_at)
                 if run2 > best_run:
                     best_run, best_ci = run2, ci
             if best_run == 0:
                 break
             lbl_at += best_run
-            cur += 1
-            ahead += 1
             x_ref = nxt[best_ci]["x"]
         if lbl_at == len(lbl_words):
             return (start_x, start_y)
@@ -254,7 +309,7 @@ def _multiline_with_skips(lines: list[dict], lbl_words: list[str]) -> tuple[int,
 def find_label_positions(
     page: PageView,
     labels: list[str],
-    next_page_tokens: list[dict] | None,
+    next_page: PageView | None,
     img_h: int = C.PAGE_H,
 ) -> dict[str, list[tuple[int, int]]]:
     positions: dict[str, list[tuple[int, int]]] = {}
@@ -266,10 +321,10 @@ def find_label_positions(
                 hits = [pos]
         if hits:
             positions[lbl] = hits
-    if next_page_tokens is not None:
+    if next_page is not None:
         pending = [lbl for lbl in labels if not positions.get(lbl)]
         if pending:
-            ext = page.lines + next_page_head(next_page_tokens, img_h, C.NEXT_PAGE_HEAD_LINES)
+            ext = page.lines + next_page_head(next_page, img_h, C.NEXT_PAGE_HEAD_LINES)[0]
             for lbl in pending:
                 pos = _multiline_with_skips(ext, lbl.split())
                 if pos is not None:
@@ -284,92 +339,19 @@ def find_label_positions(
 
 def _section_span_in_line(words: list[dict], name_words: list[str]) -> tuple[int | None, int]:
     """Best (start_idx, matched_count) for a section header in one line:
-    a token whose cleaned text starts with the full concatenated header
-    counts as a complete match (merged-token OCR); otherwise walk
-    word-by-word — first word prefix-flex, rest contains-flex."""
+    a token whose F7 form starts with the full concatenated header
+    counts as a complete match (merged-token OCR); otherwise the longest
+    ``prefix_run``. Unlike the question scan it keeps scanning after a
+    complete run, so a later merged token wins."""
     full = " ".join(name_words)
     best_start, best_matched = None, 0
     for si in range(len(words)):
-        tok0 = ocr_norm_preserve_punct_upper(words[si]["text"])
-        if flex_startswith(full, tok0):
+        if flex_startswith(full, words[si]["pn"]):
             return si, len(name_words)
-        matched = 0
-        k = si
-        while k < len(words) and matched < len(name_words):
-            tok_c = ocr_norm_preserve_punct_upper(words[k]["text"])
-            ok = (
-                flex_startswith(name_words[matched], tok_c)
-                if matched == 0
-                else flex_contains(name_words[matched], tok_c)
-            )
-            if not ok:
-                break
-            matched += 1
-            k += 1
+        matched = prefix_run(words, si, name_words)
         if matched > best_matched:
             best_matched, best_start = matched, si
     return best_start, best_matched
-
-
-def _section_continue(lines: list[dict], i0: int, start_idx: int, name_words: list[str], matched: int) -> int:
-    """Continue a partially matched header onto following line groups
-    (same-y sibling lines considered together), ≤5 lookaheads, x-tol
-    preferred; returns total matched words."""
-    x_tol, max_ahead = C.LABEL_MULTILINE_BASE_X_TOLERANCE, C.LABEL_MULTILINE_MAX_LOOKAHEAD
-    cur, lbl_at = i0, matched
-    x_ref = lines[i0]["words"][start_idx]["x"]
-    ahead = 0
-    while lbl_at < len(name_words) and ahead < max_ahead:
-        j = cur + 1
-        cur_y = lines[cur]["y"]
-        while j < len(lines) and lines[j]["y"] <= cur_y:
-            j += 1
-        if j >= len(lines):
-            break
-        next_y = lines[j]["y"]
-        sibs = []
-        while j < len(lines) and lines[j]["y"] == next_y:
-            sibs.append(j)
-            j += 1
-        want = name_words[lbl_at]
-        best_run, best_li, best_ci = 0, None, None
-        for li in sibs:
-            toks = lines[li]["words"]
-            if not toks:
-                continue
-            cands = (
-                [k for k, t in enumerate(toks)
-                 if abs(t["x"] - x_ref) <= x_tol
-                 and flex_startswith(want, ocr_norm_preserve_punct_upper(t["text"]))]
-                or [k for k, t in enumerate(toks)
-                    if flex_startswith(want, ocr_norm_preserve_punct_upper(t["text"]))]
-                or [k for k, t in enumerate(toks)
-                    if abs(t["x"] - x_ref) <= x_tol
-                    and flex_contains(want, ocr_norm_preserve_punct_upper(t["text"]))]
-            )
-            for ci in cands:
-                run = 0
-                k = ci
-                while k < len(toks) and lbl_at + run < len(name_words):
-                    tok_c = ocr_norm_preserve_punct_upper(toks[k]["text"])
-                    ok = (
-                        flex_startswith(name_words[lbl_at + run], tok_c)
-                        if run == 0
-                        else flex_contains(name_words[lbl_at + run], tok_c)
-                    )
-                    if not ok:
-                        break
-                    run += 1
-                    k += 1
-                if run > best_run:
-                    best_run, best_li, best_ci = run, li, ci
-        if not best_run or best_ci is None or best_li is None:
-            break
-        x_ref = lines[best_li]["words"][best_ci]["x"]
-        lbl_at += best_run
-        cur = best_li
-        ahead += 1
-    return lbl_at
 
 
 def find_section_regions(
@@ -402,7 +384,8 @@ def find_section_regions(
             sx, sy = int(words[start_idx]["x"]), int(words[start_idx]["y"])
             if sx > x_threshold or sy in claimed:
                 continue
-            total = _section_continue(page.lines, i, start_idx, name_words, matched)
+            steps = continue_lines(page.lines, i, words[start_idx]["x"], name_words, matched)
+            total = matched + sum(map(len, steps))
             cand = (int(total), sy, sx)
             if best is None or cand > best:
                 best = cand

@@ -6,18 +6,22 @@ pipeline. Independent implementation checked span-for-span against the
 transcription oracle in ``pdf_parser_spark.oracle.response_oracle``;
 reference provenance is cited there.
 
-Perf posture: token normalization is computed once per page (the
-reference re-normalizes per comparison); flex matchers are memoized in
-``functions.text``. Each matcher line also carries an IL1-folded key
-of its tokens' F7 forms (``functions.text.line_key``), and a question
-scan starts only on lines whose key holds the question's folded first
-word (``flex_key``). Folding maps 'L' and '1' to 'I' on both sides, so
-every F5/F6 match of a token is a substring of the line's key (the
-superset invariant in ``functions.text``): a skipped line is one where
-the exact matchers would return a run of 0, and the scan still visits
-the remaining lines in order. The next page's head lines are built once
-per page, on first use. Per-page cost is what multiplies by 10^12 docs
-— this kernel is the throughput hot path after decode.
+Perf posture: the question scans run on ``geometry.PageView.qlines``,
+the page model the label and section scans use too: built once per
+page in ``extract_document`` (the next page's view is reused, not
+rebuilt), each token normalized once, each line keyed by the
+IL1-folded F7 forms of its tokens (``pkey``). A question scan starts
+only on lines whose key holds the question's folded first word
+(``flex_key``): folding maps 'L' and '1' to 'I' on both sides, so every
+F5/F6 match of a token is a substring of the line's key (the superset
+invariant in ``functions.text``), a skipped line is one where the exact
+matchers would return a run of 0, and the scan still visits the
+remaining lines in order. Wrapped questions continue through
+``geometry.continue_lines``, the section scan's continuation. Crop
+re-OCR views are memoized per crop, the next page's shifted head is
+built once per page on first use, and the answer lines only when a
+question matched. Per-page cost is what multiplies by 10^12 docs —
+this kernel is the throughput hot path after decode.
 """
 
 from __future__ import annotations
@@ -25,14 +29,9 @@ from __future__ import annotations
 import re
 
 from pdf_parser_spark import config as C
+from pdf_parser_spark.functions.text import flex_key, flex_startswith
+from pdf_parser_spark.plans.geometry import PageView, continue_lines, next_page_head, prefix_run
 from pdf_parser_spark.sources.perception import SyntheticPerception
-from pdf_parser_spark.functions.text import (
-    flex_contains,
-    flex_key,
-    flex_startswith,
-    line_key,
-    ocr_norm_preserve_punct_upper as pnorm,
-)
 
 A_COL_GAP = 5
 A_RIGHT_MARGIN = 20
@@ -45,40 +44,25 @@ PROBE_BANDS = 2
 _ZIP_RE = re.compile(r"^\d{5}(-\d{4})?$")
 
 
-class QAPage:
-    """Matcher + answer line views of one page's tokens, built once.
-    Each matcher line carries ``key``, the folded key of its tokens' F7
-    forms (``functions.text.line_key``)."""
-
-    __slots__ = ("m_lines", "a_lines")
-
-    def __init__(self, tokens: list[dict]):
-        m: dict[tuple, dict] = {}
-        a: dict[tuple, dict] = {}
-        m_order: list[tuple] = []
-        a_order: list[tuple] = []
-        for t in tokens:
-            word = str(t["text"]).strip()
-            key = (t["block"], t["par"], t["line"])
-            if key not in a:
-                a[key] = {"words": [], "y": int(t["y"]), "h": int(t["h"])}
-                a_order.append(key)
-            if not word:
-                continue
-            tok = {"text": word, "x": int(t["x"]), "y": int(t["y"]),
-                   "w": int(t["w"]), "h": int(t["h"]), "pn": pnorm(word)}
-            a[key]["words"].append(tok)
-            a[key]["h"] = max(a[key]["h"], tok["h"])
-            if key not in m:
-                m[key] = {"words": [], "y": tok["y"]}
-                m_order.append(key)
-            m[key]["words"].append(tok)
-        self.m_lines = [m[k] for k in m_order]
-        for ln in self.m_lines:
-            ln["words"].sort(key=lambda w: w["x"])
-            ln["key"] = line_key([w["pn"] for w in ln["words"]])
-        self.m_lines.sort(key=lambda ln: ln["y"])
-        self.a_lines = sorted((a[k] for k in a_order), key=lambda ln: ln["y"])
+def answer_lines(tokens: list[dict]) -> list[dict]:
+    """Answer-phase lines: (block, par, line) groups of all tokens,
+    blank ones included, in first-seen order; y and h from the first
+    token, h maxed over the words; words in token order with stripped
+    text; stable-sorted by y."""
+    index: dict[tuple, dict] = {}
+    lines: list[dict] = []
+    for t in tokens:
+        key = (t["block"], t["par"], t["line"])
+        ln = index.get(key)
+        if ln is None:
+            ln = index[key] = {"words": [], "y": int(t["y"]), "h": int(t["h"])}
+            lines.append(ln)
+        word = str(t["text"]).strip()
+        if word:
+            ln["words"].append({"text": word, "x": int(t["x"])})
+            ln["h"] = max(ln["h"], int(t["h"]))
+    lines.sort(key=lambda ln: ln["y"])
+    return lines
 
 
 def _seg(tokens: list[dict], count: int) -> dict:
@@ -97,45 +81,19 @@ def _full_matches_in_line(words: list[dict], q_words: list[str], q_full: str) ->
     for si in range(len(words)):
         if flex_startswith(q_full, words[si]["pn"]):
             segs.append(_seg([words[si]], nq))
-            continue
-        run = 0
-        k = si
-        while run < nq:
-            if k >= len(words):
-                run = 0
-                break
-            ok = (
-                flex_startswith(q_words[run], words[k]["pn"])
-                if run == 0
-                else flex_contains(q_words[run], words[k]["pn"])
-            )
-            if not ok:
-                run = 0
-                break
-            run += 1
-            k += 1
-        if run == nq:
-            segs.append(_seg(words[si : si + run], run))
+        elif prefix_run(words, si, q_words) == nq:
+            segs.append(_seg(words[si : si + nq], nq))
     return segs
 
 
 def _best_run_in_line(words: list[dict], q_words: list[str], q_full: str):
+    """Like ``geometry._section_span_in_line``, but stops at the first
+    complete run."""
     best_start, best_run = None, 0
     for si in range(len(words)):
         if flex_startswith(q_full, words[si]["pn"]):
             return si, len(q_words)
-        run = 0
-        k = si
-        while k < len(words) and run < len(q_words):
-            ok = (
-                flex_startswith(q_words[run], words[k]["pn"])
-                if run == 0
-                else flex_contains(q_words[run], words[k]["pn"])
-            )
-            if not ok:
-                break
-            run += 1
-            k += 1
+        run = prefix_run(words, si, q_words)
         if run > best_run:
             best_run, best_start = run, si
         if run == len(q_words):
@@ -145,104 +103,20 @@ def _best_run_in_line(words: list[dict], q_words: list[str], q_full: str):
 
 def _multiline_hit(lines: list[dict], starts: list[int], q_words: list[str], q_full: str):
     """First multiline hit starting on one of the lines ``starts``
-    (indices into ``lines``, ascending); continuations may use any line."""
-    x_tol, max_ahead = C.LABEL_MULTILINE_BASE_X_TOLERANCE, C.LABEL_MULTILINE_MAX_LOOKAHEAD
+    (indices into ``lines``, ascending); continuations may use any line.
+    Each continuation step becomes one segment."""
     for i in starts:
-        line = lines[i]
-        words = line["words"]
+        words = lines[i]["words"]
         start_idx, run = _best_run_in_line(words, q_words, q_full)
         if run == 0:
             continue
-        start_x, start_y = words[start_idx]["x"], words[start_idx]["y"]
-        seg0_toks = words[start_idx : start_idx + run]
-        last = words[min(start_idx + max(0, run - 1), len(words) - 1)]
-        segments = [{
-            "line_y": int(min(t["y"] for t in seg0_toks) if run > 0 else line["y"]),
-            "start_x": start_x,
-            "end_x": last["x"] + last["w"],
-            "count": run,
-            "tokens": [t["text"] for t in seg0_toks],
-        }]
-        x_ref, lbl_at, cur, ahead = start_x, run, i, 0
-        while lbl_at < len(q_words) and ahead < max_ahead:
-            j = cur + 1
-            cur_y = lines[cur]["y"]
-            while j < len(lines) and lines[j]["y"] <= cur_y:
-                j += 1
-            if j >= len(lines):
-                break
-            next_y = lines[j]["y"]
-            sibs = []
-            while j < len(lines) and lines[j]["y"] == next_y:
-                sibs.append(j)
-                j += 1
-            want = q_words[lbl_at]
-            best_run2, best_toks = 0, None
-            for li in sibs:
-                toks = lines[li]["words"]
-                if not toks:
-                    continue
-                cands = [
-                    k for k, t in enumerate(toks)
-                    if abs(t["x"] - x_ref) <= x_tol and flex_startswith(want, t["pn"])
-                ] or [
-                    k for k, t in enumerate(toks) if flex_startswith(want, t["pn"])
-                ] or [
-                    k for k, t in enumerate(toks)
-                    if abs(t["x"] - x_ref) <= x_tol and flex_contains(want, t["pn"])
-                ]
-                if not cands:
-                    continue
-                line_best, line_start = 0, None
-                for ci in cands:
-                    run2 = 0
-                    k2 = ci
-                    while k2 < len(toks) and lbl_at + run2 < len(q_words):
-                        ok2 = (
-                            flex_startswith(q_words[lbl_at + run2], toks[k2]["pn"])
-                            if run2 == 0
-                            else flex_contains(q_words[lbl_at + run2], toks[k2]["pn"])
-                        )
-                        if not ok2:
-                            break
-                        run2 += 1
-                        k2 += 1
-                    if run2 > line_best:
-                        line_best, line_start = run2, ci
-                if line_best > best_run2:
-                    best_run2 = line_best
-                    best_toks = toks[line_start : line_start + line_best]
-            if not best_run2 or best_toks is None:
-                break
-            segments.append(_seg(best_toks, best_run2))
-            lbl_at += best_run2
-            # advance cur to the sibling line the tokens came from
-            # (identity, not equality — equal-looking tokens may exist)
-            cur = next(
-                li for li in sibs
-                if any(t is best_toks[0] for t in lines[li]["words"])
-            )
-            ahead += 1
-            x_ref = best_toks[0]["x"]
-        if lbl_at == len(q_words):
-            return {"x": int(start_x), "y": int(start_y), "segments": segments}
+        start = words[start_idx]
+        steps = continue_lines(lines, i, start["x"], q_words, run)
+        if run + sum(map(len, steps)) == len(q_words):
+            segments = [_seg(words[start_idx : start_idx + run], run)]
+            segments += [_seg(step, len(step)) for step in steps]
+            return {"x": int(start["x"]), "y": int(start["y"]), "segments": segments}
     return None
-
-
-def _head_lines(next_tokens: list[dict], img_h: int, k: int) -> list[dict]:
-    shifted = [dict(t, y=t["y"] + img_h) for t in next_tokens if str(t["text"]).strip()]
-    if not shifted:
-        return []
-    view = QAPage(shifted)
-    kept, groups, i = [], 0, 0
-    lines = view.m_lines
-    while i < len(lines) and groups < max(0, k):
-        gy = lines[i]["y"]
-        while i < len(lines) and lines[i]["y"] == gy:
-            kept.append(lines[i])
-            i += 1
-        groups += 1
-    return kept
 
 
 def find_question_hits(
@@ -264,7 +138,7 @@ def find_question_hits(
             continue
         q_full = " ".join(q_words)
         first = flex_key(q_words[0])
-        starts = [i for i, line in enumerate(lines) if first in line["key"]]
+        starts = [i for i, line in enumerate(lines) if first in line["pkey"]]
         if not starts:
             continue
         hits = []
@@ -300,32 +174,29 @@ def _bands_from_regions(sections, regions, img_h):
 
 
 def match_question_sections(
-    tokens: list[dict],
-    page: QAPage,
+    page: PageView,
     sections: list[dict],
     regions: dict,
-    next_page_tokens: list[dict] | None,
+    next_page: PageView | None,
+    env,
     img_w: int = C.PAGE_W,
     img_h: int = C.PAGE_H,
-    env=None,
 ) -> list[dict]:
-    if env is None:
-        env = SyntheticPerception(tokens)
     anchors, ordered, bands = _bands_from_regions(sections, regions, img_h)
     # crop re-OCR views are deterministic per (y1c, y2c); questions in
     # one section share crop bounds, so memoize the built view
-    crop_views: dict[tuple[int, int], QAPage] = {}
+    crop_views: dict[tuple[int, int], list[dict]] = {}
 
-    def crop_view(y1c: int, y2c: int) -> QAPage:
+    def crop_view(y1c: int, y2c: int) -> list[dict]:
         key = (y1c, y2c)
         view = crop_views.get(key)
         if view is None:
-            view = QAPage(env.crop_tokens(0, y1c, img_w, y2c))
+            view = PageView(env.crop_tokens(0, y1c, img_w, y2c)).qlines
             crop_views[key] = view
         return view
 
     # this page's lines plus the next page's head, built on first use:
-    # it depends only on next_page_tokens
+    # it depends only on next_page
     ext_lines: list[dict] | None = None
     out = []
     for sec in sections:
@@ -333,7 +204,7 @@ def match_question_sections(
         qs = sec.get("questions") or []
         if not qs:
             continue
-        qhits = find_question_hits(page.m_lines, qs)
+        qhits = find_question_hits(page.qlines, qs)
         yband = bands.get(name)
         anchor_y = anchors.get(name)
         min_start = int(anchor_y) + C.ANCHOR_OFFSET_PX if anchor_y is not None else None
@@ -352,7 +223,7 @@ def match_question_sections(
                 y2c_primary = max(y1c + 1, int(min(img_h, yband[1])))
 
                 def crop_hits(y2c):
-                    found = find_question_hits(crop_view(y1c, y2c).m_lines, [q]).get(q, [])
+                    found = find_question_hits(crop_view(y1c, y2c), [q]).get(q, [])
                     res = []
                     for h in found:
                         h["y"] += y1c
@@ -369,11 +240,9 @@ def match_question_sections(
                     y2c_wide = max(y1c + 1, int(min(img_h, next_b)))
                     if y2c_wide > y2c_primary:
                         hits = crop_hits(y2c_wide)
-            if not hits and next_page_tokens is not None:
+            if not hits and next_page is not None:
                 if ext_lines is None:
-                    ext_lines = page.m_lines + _head_lines(
-                        next_page_tokens, img_h, C.NEXT_PAGE_HEAD_LINES
-                    )
+                    ext_lines = page.qlines + next_page_head(next_page, img_h, C.NEXT_PAGE_HEAD_LINES)[1]
                 hits = [h for h in find_question_hits(ext_lines, [q]).get(q, []) if in_band(h)]
             if not hits:
                 continue
@@ -409,18 +278,15 @@ def _seg_tokens_lower(q) -> list[str]:
 
 def attach_answers(
     tokens: list[dict],
-    page: QAPage,
     matches: list[dict],
     checkboxes: list[dict] | None,
-    highlights: list[dict] | None,
+    env,
     img_w: int = C.PAGE_W,
     img_h: int = C.PAGE_H,
-    env=None,
 ) -> list[dict]:
-    highlights = highlights or []
-    if env is None:
-        env = SyntheticPerception(tokens, highlights)
-    line_list = page.a_lines
+    if not matches:
+        return matches
+    line_list = answer_lines(tokens)
 
     def right_bound(qlist, cur):
         cx, cy = cur["position"]
@@ -702,19 +568,21 @@ def attach_answers(
 
 def page_responses(
     tokens: list[dict],
+    page: PageView,
     question_sections: list[dict],
     regions: dict,
     checkboxes: list[dict] | None = None,
     highlights: list[dict] | None = None,
-    next_page_tokens: list[dict] | None = None,
+    next_page: PageView | None = None,
     img_w: int = C.PAGE_W,
     img_h: int = C.PAGE_H,
     env=None,
 ) -> list[dict]:
-    page = QAPage(tokens)
-    matches = match_question_sections(
-        tokens, page, question_sections, regions, next_page_tokens, img_w, img_h, env=env
-    )
-    return attach_answers(
-        tokens, page, matches, checkboxes, highlights, img_w, img_h, env=env
-    )
+    """One page's Q/A layer: ``page`` is the page's view of ``tokens``,
+    ``next_page`` the next page's view (cross-page fallback). Both phases
+    share one perception environment, the synthetic model over
+    ``tokens`` and ``highlights`` when ``env`` is None."""
+    if env is None:
+        env = SyntheticPerception(tokens, highlights)
+    matches = match_question_sections(page, question_sections, regions, next_page, env, img_w, img_h)
+    return attach_answers(tokens, matches, checkboxes, env, img_w, img_h)

@@ -31,12 +31,14 @@ doc_id for geometry) moves only token data, never pixels.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import BinaryType, IntegerType, StringType, StructField, StructType
+
+from pdf_parser_spark.sources import perception as P
 
 # Perception transport: the (tokens, matches) payload crosses the one
 # shuffle of the pipeline as an opaque pickled binary column. Nested
@@ -53,52 +55,58 @@ PERCEPTION_SCHEMA = StructType(
 )
 
 
-def _synthetic_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    import pickle
+def page_decoder(decoder: str) -> Callable[[str, int, str], tuple]:
+    """The per-page decode of ``decoder``: (doc_id, page_no, media_ref)
+    → (tokens, matches, highlights, pre).
 
-    from pdf_parser_spark.fixtures.generator import page_perception
-
-    payloads = []
-    for doc_id, page_no in zip(pdf["doc_id"], pdf["page_no"]):
-        toks, matches, highlights = page_perception(str(doc_id), int(page_no))
-        payloads.append(pickle.dumps((toks, matches, highlights), protocol=5))
-    return pd.DataFrame(
-        {"doc_id": pdf["doc_id"], "page_no": pdf["page_no"], "payload": payloads}
-    )
-
-
-def _native_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """K1-K4 native decode: media_ref → page image → preprocess →
-    template match → OCR, all via the real numpy kernels in
-    ``sources.kernels`` (reference chain: /root/reference/extractor.py:
-    956-989, 108-137, 139-153). The OCR call itself is import-gated
-    (Tesseract) and worker-bindable via ``perception.configure_native``.
-
-    The payload carries the media_ref alongside (tokens, matches) so the
-    downstream Q/A layer can rebuild a :class:`NativePerception` for
-    crop re-OCR / highlight recovery after the doc_id shuffle —
-    re-rasterizing on demand instead of shuffling pixels.
+    - synthetic: perception derives deterministically from
+      (doc_id, page_no); ``pre`` is None.
+    - native: K1-K4 — media_ref → page image → preprocess → template
+      match → OCR, via the real numpy kernels in ``sources.kernels``
+      (reference chain: extractor.py:956-989, 108-137, 139-153);
+      ``pre`` is the preprocessed page. The checkbox templates load
+      once per decoder. The OCR call itself is import-gated
+      (Tesseract) and worker-bindable via ``perception.configure_native``.
     """
-    import pickle
+    if decoder == "synthetic":
+        from pdf_parser_spark.fixtures.generator import page_perception
+
+        return lambda doc_id, page_no, media_ref: (*page_perception(doc_id, page_no), None)
 
     from pdf_parser_spark import config as C
     from pdf_parser_spark.sources import kernels as K
-    from pdf_parser_spark.sources import perception as P
 
     ticked, empty = P.load_templates()
-    payloads = []
-    for media_ref in pdf["media_ref"]:
+
+    def native(doc_id: str, page_no: int, media_ref: str) -> tuple:
         rgb = P.load_page_rgb(str(media_ref))
-        tokens, matches, _pre = K.native_page_perception(
+        tokens, matches, pre = K.native_page_perception(
             rgb, ticked, empty, C.TEMPLATE_THRESHOLD, ocr=P.native_ocr_tokens
         )
-        payloads.append(pickle.dumps((tokens, matches, [], str(media_ref)), protocol=5))
+        return tokens, matches, [], pre
+
+    return native
+
+
+def _decode_batch(pdf: pd.DataFrame, decoder: str) -> pd.DataFrame:
+    """Page rows → perception rows. A native payload also carries the
+    media_ref, so the downstream Q/A layer can rebuild a
+    :class:`NativePerception` for crop re-OCR / highlight recovery after
+    the doc_id shuffle — re-rasterizing on demand instead of shuffling
+    pixels."""
+    import pickle
+
+    decode = page_decoder(decoder)
+    payloads = []
+    for doc_id, page_no, media_ref in zip(pdf["doc_id"], pdf["page_no"], pdf["media_ref"]):
+        tokens, matches, highlights, _pre = decode(str(doc_id), int(page_no), media_ref)
+        payload = (tokens, matches, highlights)
+        if decoder == "native":
+            payload += (str(media_ref),)
+        payloads.append(pickle.dumps(payload, protocol=5))
     return pd.DataFrame(
         {"doc_id": pdf["doc_id"], "page_no": pdf["page_no"], "payload": payloads}
     )
-
-
-_DECODERS = {"synthetic": _synthetic_decode_batch, "native": _native_decode_batch}
 
 
 def perceive(pages: DataFrame, decoder: str = "synthetic", parallelism: int | None = None) -> DataFrame:
@@ -107,9 +115,8 @@ def perceive(pages: DataFrame, decoder: str = "synthetic", parallelism: int | No
     ``parallelism``: round-robin repartition width before the heavy UDF
     (skew by granularity). Default: leave partitioning as-is.
     """
-    decode = _DECODERS[decoder]
-    from pdf_parser_spark.sources import perception as P
-
+    if decoder not in ("synthetic", "native"):
+        raise ValueError(f"unknown decoder {decoder!r}")
     specs = P.binding_specs()  # captured at plan time, re-applied per worker
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -120,7 +127,7 @@ def perceive(pages: DataFrame, decoder: str = "synthetic", parallelism: int | No
                 # many pages never materializes all decoded output at
                 # once (R12, SURVEY.md §4)
                 for start in range(0, len(pdf), 256):
-                    yield decode(pdf.iloc[start : start + 256])
+                    yield _decode_batch(pdf.iloc[start : start + 256], decoder)
 
     if parallelism is None:
         # default: 2 waves per core — page-granular rows spread a skewed
@@ -137,32 +144,17 @@ def decode_doc(
     offset order) → (pages, envs) where pages maps page_no →
     (tokens, matches, highlights) and envs maps page_no → the page's
     perception environment (crop re-OCR / highlight recovery, K5/K6).
-
-    - synthetic: perception derives deterministically from
-      (doc_id, page_no); env is the synthetic model (built downstream
-      from the page's tokens+highlights — envs stays empty).
-    - native: rasterize + preprocess + template-match + OCR via the real
-      kernels; env wraps the in-memory preprocessed page (decode and
-      geometry share the task in fused mode, so no re-rasterize).
+    Synthetic pages get no env (the Q/A layer builds the synthetic
+    model from the page's tokens+highlights); a native env wraps the
+    in-memory preprocessed page (decode and geometry share the task in
+    fused mode, so no re-rasterize).
     """
+    decode = page_decoder(decoder)
     media = [s for s in sorted(spans, key=lambda s: s["offset"]) if s["kind"] != "text"]
-    if decoder == "synthetic":
-        from pdf_parser_spark.fixtures.generator import page_perception
-
-        return {i + 1: page_perception(doc_id, i + 1) for i in range(len(media))}, {}
-
-    from pdf_parser_spark import config as C
-    from pdf_parser_spark.sources import kernels as K
-    from pdf_parser_spark.sources import perception as P
-
-    ticked, empty = P.load_templates()
     pages, envs = {}, {}
-    for i, span in enumerate(media):
-        rgb = P.load_page_rgb(str(span["media_ref"]))
-        tokens, matches, pre = K.native_page_perception(
-            rgb, ticked, empty, C.TEMPLATE_THRESHOLD, ocr=P.native_ocr_tokens
-        )
-        pages[i + 1] = (tokens, matches, [])
-        envs[i + 1] = P.NativePerception(page_pre=pre)
+    for page_no, span in enumerate(media, 1):
+        tokens, matches, highlights, pre = decode(doc_id, page_no, span["media_ref"])
+        pages[page_no] = (tokens, matches, highlights)
+        if pre is not None:
+            envs[page_no] = P.NativePerception(page_pre=pre)
     return pages, envs
-

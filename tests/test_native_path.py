@@ -98,11 +98,11 @@ def test_native_paged_payload_roundtrip(tmp_path, native_bindings):
 
     import pandas as pd
 
-    from pdf_parser_spark.sources.decoder import _native_decode_batch
+    from pdf_parser_spark.sources.decoder import _decode_batch
 
     ref = _build_page(tmp_path)
     batch = pd.DataFrame({"doc_id": ["nat_doc"], "page_no": [1], "media_ref": [ref]})
-    out = _native_decode_batch(batch)
+    out = _decode_batch(batch, "native")
     tokens, matches, highlights, media_ref = pickle.loads(bytes(out["payload"][0]))
     assert media_ref == ref and len(tokens) == 3 and len(matches) >= 2
 

@@ -22,6 +22,10 @@ VOCAB = [
     # non-ASCII spellings NFKD or upper() fold onto label words:
     # fullwidth D, dotless i, long s, the fi ligature
     "\uff24iabetes", "L\u0131ver", "Exerci\u017fe", "\ufb01rst", "Relat\u0131on\u017fhip",
+    # edge whitespace: str.strip() removes it, F1/F7 keep the Ogham
+    # space mark (U+1680), and NFKD folds the ideographic space onto ' '
+    " Diabetes", "Heart\u00a0", "First\t", "", " ", "\u3000Name",
+    "\u1680Exercise", "\u1680FAMILY", "\u1680Relationship", "\u1680First", "Liver\u1680",
 ]
 
 SECTIONS = [
